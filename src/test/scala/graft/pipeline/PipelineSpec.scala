@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSparkSession
-import graft.quality.ValidationFailure
+import graft.quality.{CheckResult, ValidationFailure}
 
 /** End-to-end pipeline test with planted defects (SURVEY §5.2.2,
   * FIXTURES.md §A): the transform must drop exactly the malformed rows and
@@ -63,6 +63,66 @@ class PipelineSpec extends AnyFunSuite {
       "store_sales/referential_integrity", // P999 orphan
       "store_sales/range_sales_amount",    // -5.00
       "products/range_price"))             // price 0.0 (strict > 0)
+  }
+
+  private def critical(check: String, table: String, passed: Boolean, detail: String) =
+    CheckResult(check, table, "CRITICAL", passed, detail)
+
+  test("validate: every result on the planted fixture, in order, with its detail") {
+    val results = Pipeline.run(spark, salesCsv, productsJson, database = "test_pin",
+      failOnCritical = false)
+    assert(results == Seq(
+      critical("not_empty", "store_sales", true, "rows=5"),
+      critical("not_empty", "products", true, "rows=3"),
+      critical("row_count", "store_sales", true, "actual=5 expected=5"),
+      critical("row_count", "products", true, "actual=3 expected=3"),
+      critical("null_date", "store_sales", true, "nulls=0"),
+      critical("null_product_id", "store_sales", true, "nulls=0"),
+      critical("null_units_sold", "store_sales", true, "nulls=0"),
+      critical("null_sales_amount", "store_sales", true, "nulls=0"),
+      critical("null_product_id", "products", true, "nulls=0"),
+      critical("null_product_name", "products", true, "nulls=0"),
+      critical("null_price", "products", true, "nulls=0"),
+      critical("no_duplicate_keys", "store_sales", false,
+        "duplicate keys (first 5): [P002,2024-01-07 00:00:00.0,2]"),
+      critical("no_duplicate_keys", "products", true, "duplicates=0"),
+      critical("referential_integrity", "store_sales", false, "orphans=1"),
+      critical("range_sales_amount", "store_sales", false, "min=-5.0 (must be >= 0)"),
+      critical("range_units_sold", "store_sales", true, "min=1.0 (must be >= 0)"),
+      critical("range_price", "products", false, "min=0.0 (must be > 0)")))
+  }
+
+  test("validate: a product id under two names and a null sales key") {
+    import spark.implicits._
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    val sales = Seq(
+      (ts("2024-01-05 00:00:00"), "S01", Some("P1"), 3L, 29.97),
+      (ts("2024-01-06 00:00:00"), "S01", None: Option[String], 1L, 9.99),
+      (ts("2024-01-07 00:00:00"), "S02", Some("P9"), 2L, 19.98))
+      .toDF("date", "store_id", "product_id", "units_sold", "sales_amount")
+    val products = Seq(("P1", "Widget", 9.99), ("P1", "Widget v2", 10.99), ("P2", "Gadget", 1.5))
+      .toDF("product_id", "product_name", "price")
+    val results = Pipeline.validate(sales, products, expectedSales = 3, expectedProducts = 3)
+    assert(results == Seq(
+      critical("not_empty", "store_sales", true, "rows=3"),
+      critical("not_empty", "products", true, "rows=3"),
+      critical("row_count", "store_sales", true, "actual=3 expected=3"),
+      critical("row_count", "products", true, "actual=3 expected=3"),
+      critical("null_date", "store_sales", true, "nulls=0"),
+      critical("null_product_id", "store_sales", false, "nulls=1"),
+      critical("null_units_sold", "store_sales", true, "nulls=0"),
+      critical("null_sales_amount", "store_sales", true, "nulls=0"),
+      critical("null_product_id", "products", true, "nulls=0"),
+      critical("null_product_name", "products", true, "nulls=0"),
+      critical("null_price", "products", true, "nulls=0"),
+      critical("no_duplicate_keys", "store_sales", true, "duplicates=0"),
+      critical("no_duplicate_keys", "products", false, "duplicate keys (first 5): [P1,2]"),
+      // the null key and P9 have no parent; P1's two parent rows must
+      // neither double its sales row nor hide an orphan
+      critical("referential_integrity", "store_sales", false, "orphans=2"),
+      critical("range_sales_amount", "store_sales", true, "min=9.99 (must be >= 0)"),
+      critical("range_units_sold", "store_sales", true, "min=1.0 (must be >= 0)"),
+      critical("range_price", "products", true, "min=1.5 (must be > 0)")))
   }
 
   test("E2E: clean inputs validate green and report renders") {
