@@ -62,53 +62,45 @@ object Pipeline {
   }
 
   /** Post-load validation (validate_data, etl_pipeline.py:261–473): the
-    * nine reference queries over the loaded tables, returned as results
-    * rather than raised (callers choose `Checks.assertAllPassed`). */
+    * reference's nine queries as two table passes plus two duplicate-key
+    * probes (four actions). The sales pass counts rows, nulls, orphans
+    * against the products' keys and the range minimums; the products pass
+    * counts rows and nulls and takes the price minimum. Returned as
+    * results rather than raised (callers choose `Checks.assertAllPassed`). */
   def validate(
       sales: DataFrame,
       products: DataFrame,
       expectedSales: Long,
       expectedProducts: Long): Seq[CheckResult] = {
 
-    val salesCount = Checks.rowCount(sales)
-    val productsCount = Checks.rowCount(products)
-
-    val salesNulls = Checks
-      .nullCounts(sales, Seq("date", "product_id", "units_sold", "sales_amount"))
-      .head()
-    val productNulls = Checks
-      .nullCounts(products, Seq("product_id", "product_name", "price"))
-      .head()
+    val salesProfile = Checks.tableProfile(sales,
+      Seq("date", "product_id", "units_sold", "sales_amount"),
+      Seq("sales_amount", "units_sold"),
+      Some(Checks.ForeignKey(products, "product_id", "product_id")))
+    val productsProfile = Checks.tableProfile(products,
+      Seq("product_id", "product_name", "price"), Seq("price"))
+    val salesCount = salesProfile.getAs[Long]("rows")
+    val productsCount = productsProfile.getAs[Long]("rows")
 
     val salesDupes = Checks.duplicateKeys(sales, Seq("product_id", "date"))
     val productDupes = Checks.duplicateKeys(products, Seq("product_id"))
-
-    // products is a known dimension table → force the broadcast hint
-    // (the generic default decides from size stats; see Checks.orphanRows)
-    val orphans = Checks.orphanCount(sales, products, "product_id", "product_id",
-      broadcastParent = Some(true))
-
-    val salesRanges = Checks
-      .valueRanges(sales, Seq("sales_amount", "units_sold"))
-      .head()
-    val priceRange = Checks.valueRanges(products, Seq("price")).head()
 
     Seq(
       Checks.checkNotEmpty("store_sales", salesCount),
       Checks.checkNotEmpty("products", productsCount),
       Checks.checkRowCount("store_sales", salesCount, expectedSales),
       Checks.checkRowCount("products", productsCount, expectedProducts)) ++
-      Checks.checkNoNulls("store_sales", salesNulls) ++
-      Checks.checkNoNulls("products", productNulls) ++ Seq(
+      Checks.checkNoNulls("store_sales", salesProfile) ++
+      Checks.checkNoNulls("products", productsProfile) ++ Seq(
       Checks.checkNoDuplicates("store_sales", salesDupes),
       Checks.checkNoDuplicates("products", productDupes),
-      Checks.checkNoOrphans("store_sales", orphans),
+      Checks.checkNoOrphans("store_sales", salesProfile.getAs[Long]("orphans")),
       Checks.checkNonNegative("store_sales", "sales_amount",
-        salesRanges.getAs[Double]("min_sales_amount")),
+        Checks.minOf(salesProfile, "min_sales_amount")),
       Checks.checkNonNegative("store_sales", "units_sold",
-        salesRanges.getAs[Long]("min_units_sold").toDouble),
+        Checks.minOf(salesProfile, "min_units_sold")),
       Checks.checkStrictlyPositive("products", "price",
-        priceRange.getAs[Double]("min_price")))
+        Checks.minOf(productsProfile, "min_price")))
   }
 
   /** O1 — the whole DAG as one driver program. Returns the validation

@@ -29,7 +29,11 @@ final class ValidationFailure(val results: Seq[CheckResult])
   * Each aggregate is a single-pass Spark plan; scalar threshold
   * comparisons (B1–B8) happen on the driver against the collected
   * aggregate row — the same shape as the reference's client-side
-  * comparisons on BigQuery results.
+  * comparisons on BigQuery results. Where the reference sends one query
+  * per aggregate, pipeline validation runs two table passes
+  * ([[tableProfile]]: counts, nulls, orphans and minimums of one table)
+  * plus two duplicate-key probes; the per-aggregate functions stay for
+  * callers that need one aggregate alone.
   */
 object Checks {
 
@@ -42,10 +46,12 @@ object Checks {
     * (COUNTIF(col IS NULL) ×N, etl_pipeline.py:327–334, :344–350).
     * Output columns are named `null_<col>`. */
   def nullCounts(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs: Seq[Column] =
-      cols.map(c => count(when(col(c).isNull, lit(1))).as(s"null_$c"))
+    val aggs: Seq[Column] = cols.map(nullCount)
     df.agg(aggs.head, aggs.tail: _*)
   }
+
+  private def nullCount(c: String): Column =
+    count(when(col(c).isNull, lit(1))).as(s"null_$c")
 
   /** A3 — duplicate-key detection (GROUP BY keys HAVING COUNT(*)>1,
     * etl_pipeline.py:364–369, :378–383). Hash aggregate; partial
@@ -85,6 +91,39 @@ object Checks {
       broadcastParent: Option[Boolean] = None): Long =
     orphanRows(child, parent, childKey, parentKey, broadcastParent).count()
 
+  /** A foreign key from a child table to a dimension-sized parent table. */
+  final case class ForeignKey(parent: DataFrame, childKey: String, parentKey: String)
+
+  /** A1 + A2 + J1 + the A4 minimums of one table in ONE pass: a single
+    * row with `rows`, then `null_<col>` for each of `nullCols`, then
+    * `orphans` when `fk` is given, then `min_<col>` for each of `minCols`
+    * (null on an empty table).
+    *
+    * The orphan count left-joins the child to the parent's DISTINCT keys,
+    * so a parent key listed twice neither doubles a child row (`rows`)
+    * nor hides an orphan. A null child key matches nothing and counts as
+    * an orphan, as in [[orphanRows]]'s left-anti join. The key set is
+    * always broadcast: `fk.parent` must be dimension-sized (for a
+    * fact-sized parent, use [[orphanCount]] with its size-based policy). */
+  def tableProfile(df: DataFrame, nullCols: Seq[String], minCols: Seq[String],
+      fk: Option[ForeignKey] = None): Row = {
+    val parentKey = "__parent_key"
+    val scanned = fk.fold(df) { k =>
+      val keys = k.parent.select(col(k.parentKey).as(parentKey)).distinct()
+      df.join(broadcast(keys), df(k.childKey) === keys(parentKey), "left")
+    }
+    val aggs: Seq[Column] = Seq(count(lit(1)).as("rows")) ++
+      nullCols.map(nullCount) ++
+      fk.map(_ => count(when(col(parentKey).isNull, lit(1))).as("orphans")) ++
+      minCols.map(c => min(col(c)).as(s"min_$c"))
+    scanned.agg(aggs.head, aggs.tail: _*).head()
+  }
+
+  /** A numeric aggregate field of a collected row as a double; None when
+    * the aggregate is null (MIN over an empty table). */
+  def minOf(row: Row, field: String): Option[Double] =
+    Option(row.getAs[Number](field)).map(_.doubleValue)
+
   /** A4 — multi-column MIN/MAX range extraction in one pass
     * (etl_pipeline.py:414–421, :438–443). Output: `min_<col>`, `max_<col>`. */
   def valueRanges(df: DataFrame, cols: Seq[String]): DataFrame = {
@@ -104,14 +143,14 @@ object Checks {
     CheckResult("row_count", table, "CRITICAL", actual == expected,
       s"actual=$actual expected=$expected")
 
-  /** B6 — any null count > 0 is critical (etl_pipeline.py:336–342, :352–358). */
-  def checkNoNulls(table: String, nullCountRow: Row): Seq[CheckResult] = {
-    val schema = nullCountRow.schema
-    schema.fields.toSeq.map { f =>
-      val n = nullCountRow.getAs[Long](f.name)
-      CheckResult(f.name, table, "CRITICAL", n == 0, s"nulls=$n")
+  /** B6 — any null count > 0 is critical (etl_pipeline.py:336–342, :352–358).
+    * Reads the `null_`-prefixed fields of the row and ignores the rest, so
+    * a [[tableProfile]] row is passed as it is. */
+  def checkNoNulls(table: String, nullCountRow: Row): Seq[CheckResult] =
+    nullCountRow.schema.fieldNames.toSeq.filter(_.startsWith("null_")).map { f =>
+      val n = nullCountRow.getAs[Long](f)
+      CheckResult(f, table, "CRITICAL", n == 0, s"nulls=$n")
     }
-  }
 
   /** B7 — any duplicate group is critical; offenders logged like the
     * reference's head() of the duplicate frame (etl_pipeline.py:371–390). */
@@ -130,16 +169,19 @@ object Checks {
     CheckResult("referential_integrity", table, "CRITICAL", orphans == 0,
       s"orphans=$orphans")
 
-  /** B1/B2 — non-negative range rule (min >= 0; etl_pipeline.py:424–435). */
-  def checkNonNegative(table: String, column: String, minValue: Double): CheckResult =
-    CheckResult(s"range_$column", table, "CRITICAL", minValue >= 0,
-      s"min=$minValue (must be >= 0)")
+  /** B1/B2 — non-negative range rule (min >= 0; etl_pipeline.py:424–435).
+    * A missing minimum (empty table) passes: no row breaks the rule, and
+    * `not_empty` is the check that fails. */
+  def checkNonNegative(table: String, column: String, minValue: Option[Double]): CheckResult =
+    CheckResult(s"range_$column", table, "CRITICAL", minValue.forall(_ >= 0),
+      s"min=${minValue.fold("null")(_.toString)} (must be >= 0)")
 
   /** B3 — strictly-positive range rule (min > 0; etl_pipeline.py:445–449 —
-    * note the deliberate `<= 0` asymmetry vs B1/B2). */
-  def checkStrictlyPositive(table: String, column: String, minValue: Double): CheckResult =
-    CheckResult(s"range_$column", table, "CRITICAL", minValue > 0,
-      s"min=$minValue (must be > 0)")
+    * note the deliberate `<= 0` asymmetry vs B1/B2). A missing minimum
+    * passes, as in [[checkNonNegative]]. */
+  def checkStrictlyPositive(table: String, column: String, minValue: Option[Double]): CheckResult =
+    CheckResult(s"range_$column", table, "CRITICAL", minValue.forall(_ > 0),
+      s"min=${minValue.fold("null")(_.toString)} (must be > 0)")
 
   // ── report (B9 / O5) ─────────────────────────────────────────────────
 

@@ -49,8 +49,10 @@ object SqlChecks {
        |HAVING COUNT(*) > 1""".stripMargin
 
   /** Query 7 — referential integrity via LEFT JOIN + IS NULL (:396–402);
-    * Catalyst rewrites this literal form into the same broadcast anti-join
-    * `Checks.orphanRows` plans directly. */
+    * Spark plans this literal form as a broadcast left-outer join filtered
+    * on the missing parent key. `Pipeline.validate` takes the same count
+    * inside its sales pass (`Checks.tableProfile`), over the parent's
+    * distinct keys; `Checks.orphanRows` is the left-anti form. */
   def orphanSql(salesTable: String, productsTable: String): String =
     s"""SELECT COUNT(*) AS orphaned_records
        |FROM $salesTable s
@@ -95,10 +97,10 @@ object SqlChecks {
       Checks.checkNoDuplicates(productsTable, productDupes),
       Checks.checkNoOrphans(salesTable, orphans),
       Checks.checkNonNegative(salesTable, "sales_amount",
-        salesRange.getAs[Double]("min_amount")),
+        Checks.minOf(salesRange, "min_amount")),
       Checks.checkNonNegative(salesTable, "units_sold",
-        salesRange.getAs[Long]("min_units").toDouble),
+        Checks.minOf(salesRange, "min_units")),
       Checks.checkStrictlyPositive(productsTable, "price",
-        priceRange.getAs[Double]("min_price")))
+        Checks.minOf(priceRange, "min_price")))
   }
 }

@@ -106,6 +106,22 @@ class EdgeCasesSpec extends AnyFunSuite {
     val sales = emptyDocs.select($"doc_id".as("product_id"), $"text".as("date"))
     assert(!Checks.checkNotEmpty("t", Checks.rowCount(sales)).passed)
     assert(Checks.duplicateKeys(sales, Seq("product_id")).count() == 0)
+
+    // MIN over no rows is null: the range rules pass vacuously with
+    // min=null, never with a made-up 0.0, and not_empty is the failure
+    val emptySales = Seq.empty[(java.sql.Timestamp, String, String, Long, Double)]
+      .toDF("date", "store_id", "product_id", "units_sold", "sales_amount")
+    val emptyProducts = Seq.empty[(String, String, Double)]
+      .toDF("product_id", "product_name", "price")
+    val results = graft.pipeline.Pipeline.validate(emptySales, emptyProducts, 0, 0)
+      .map(r => s"${r.table}/${r.check}" -> r).toMap
+    Seq("store_sales/range_sales_amount" -> "min=null (must be >= 0)",
+      "store_sales/range_units_sold" -> "min=null (must be >= 0)",
+      "products/range_price" -> "min=null (must be > 0)").foreach { case (k, detail) =>
+      assert(results(k).passed && results(k).detail == detail, results(k).render)
+    }
+    assert(results.values.filterNot(_.passed).map(r => s"${r.table}/${r.check}").toSet ==
+      Set("store_sales/not_empty", "products/not_empty"))
   }
 
   test("CorpusPipeline.prepare on an EMPTY corpus: zero-row outputs, zero observed counts, no crash") {

@@ -125,6 +125,37 @@ class PipelineSpec extends AnyFunSuite {
       critical("range_price", "products", true, "min=1.5 (must be > 0)")))
   }
 
+  test("validate: one call starts at most 10 Spark jobs (two table passes, two probes)") {
+    Pipeline.run(spark, salesCsv, productsJson, database = "test_jobs", failOnCritical = false)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    // jobs are told apart by job group: AQE and broadcast threads inherit
+    // the caller's local properties; the marker job's start is delivered
+    // after every event posted before it
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some("validate-jobs") => jobs.incrementAndGet(): Unit
+          case Some("validate-drain") => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup("validate-jobs", "validate")
+      Pipeline.validate(spark.table("test_jobs.store_sales"), spark.table("test_jobs.products"),
+        expectedSales = 5, expectedProducts = 3)
+      sc.setJobGroup("validate-drain", "listener drain")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+    assert(jobs.get() > 0 && jobs.get() <= 10, s"validate started ${jobs.get()} jobs")
+  }
+
   test("E2E: clean inputs validate green and report renders") {
     val cleanSales = write("target/fixtures/clean_sales.csv",
       """dt,store,product,units,amount

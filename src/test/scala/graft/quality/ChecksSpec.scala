@@ -50,10 +50,10 @@ class ChecksSpec extends AnyFunSuite {
     assert(!Checks.checkNotEmpty("t", 0).passed)
     assert(Checks.checkRowCount("t", 5, 5).passed)
     assert(!Checks.checkRowCount("t", 4, 5).passed)
-    assert(Checks.checkNonNegative("t", "c", 0.0).passed) // >= 0 passes at 0
-    assert(!Checks.checkNonNegative("t", "c", -0.01).passed)
-    assert(!Checks.checkStrictlyPositive("t", "c", 0.0).passed) // > 0 fails at 0 (B3 asymmetry)
-    assert(Checks.checkStrictlyPositive("t", "c", 0.01).passed)
+    assert(Checks.checkNonNegative("t", "c", Some(0.0)).passed) // >= 0 passes at 0
+    assert(!Checks.checkNonNegative("t", "c", Some(-0.01)).passed)
+    assert(!Checks.checkStrictlyPositive("t", "c", Some(0.0)).passed) // > 0 fails at 0 (B3 asymmetry)
+    assert(Checks.checkStrictlyPositive("t", "c", Some(0.01)).passed)
   }
 
   test("B6/B7: null-count and duplicate checks") {
